@@ -1,15 +1,18 @@
 """Seeded input generation for the benchmark workloads.
 
 Every input a workload reads is generated here from the run's seed and
-cached on disk under ``<cache>/<workload>-<seed>/``, together with the
-references its operations are checked against (reference.prepare): the
-same seed always gives byte-identical inputs, and generation is never
-part of a timed interval or of ``setup_s``. The package under test only
-ever sees the generated files.
+cached on disk under ``<cache>/<workload>-<seed>-<version>/``, together
+with the references its operations are checked against
+(reference.prepare). ``<version>`` hashes the code that shapes inputs and
+references, so an edit to it never reuses a stale cache. The same seed
+always gives byte-identical inputs, and generation is never part of a
+timed interval or of ``setup_s``. The package under test only ever sees
+the generated files.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import pickle
@@ -21,11 +24,14 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+import params as P
 from params import (
     BASE_DOCS, CROSS_NATION_SHARE, CYPHER_PARAM_SETS,
     EMB_DIM, ISOLATED_SHARE, LANGS, LINKS_PER_CUSTOMER, N_CUSTOMERS, N_EMBEDDINGS,
-    N_LABELS, N_NATIONS, N_ORDERS, N_REGIONS, NEAR_DUP_SHARE, QUERY_VECTORS, REPLICAS,
+    N_LABELS, N_NATIONS, N_ORDERS, N_REGIONS, NEAR_DUP_SHARE, REPLICAS,
 )
+
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 STATUSES = ("F", "O", "P")
@@ -114,6 +120,12 @@ def _graph_iterative(rng, d: str) -> dict:
     pairs = np.unique(np.array([src, dst], dtype=np.int64).T, axis=0)
     _write({"src": pairs[:, 0], "dst": pairs[:, 1]}, os.path.join(d, "links.parquet"))
 
+    households = _households(rng)
+    _write(
+        {"src": households[:, 0], "dst": households[:, 1]},
+        os.path.join(d, "households.parquet"),
+    )
+
     params = [
         {
             "custkey": int(rng.integers(0, n)),
@@ -128,7 +140,62 @@ def _graph_iterative(rng, d: str) -> dict:
         "orders": N_ORDERS,
         "embeddings": N_EMBEDDINGS,
         "links": int(len(pairs)),
+        "household_edges": int(len(households)),
         "cypher_params": params,
+        **_lake(rng, d),
+    }
+
+
+def _households(rng) -> np.ndarray:
+    """(src, dst) pairs, src < dst, of disjoint cliques over the first
+    HOUSEHOLD_CUSTOMERS customers in seeded random groups."""
+    ids = rng.permutation(P.HOUSEHOLD_CUSTOMERS)
+    lo, hi = P.HOUSEHOLD_SIZES
+    pairs, start = [], 0
+    while start < len(ids):
+        group = np.sort(ids[start : start + int(rng.integers(lo, hi + 1))])
+        start += len(group)
+        pairs += [(a, b) for i, a in enumerate(group) for b in group[i + 1 :]]
+    return np.array(sorted(pairs), dtype=np.int64)
+
+
+def _lake(rng, d: str) -> dict:
+    """The lakehouse table's initial rows and its seeded write batches."""
+    o = _orders(rng, P.LAKE_ROWS, N_CUSTOMERS)
+    _write({c: o[c] for c in ("o_orderkey", "o_custkey", "o_totalprice")},
+           os.path.join(d, "lake_orders.parquet"))
+    _write(_lake_batches(rng), os.path.join(d, "lake_batches.parquet"))
+    return {"lake_rows": P.LAKE_ROWS, "lake_batch_sets": P.LAKE_PASSES}
+
+
+def _lake_batches(rng) -> dict:
+    """The seeded write batches of the lakehouse table, LAKE_PASSES sets:
+    per set a narrow upsert (updates of recently written keys plus new
+    keys, applied to every format) and a wide update of the keys below
+    WIDE_KEYS (Delta)."""
+    cols = {"pass": [], "batch": [], "o_orderkey": [], "o_custkey": [], "o_totalprice": []}
+
+    def add(p, batch, keys):
+        n = len(keys)
+        cols["pass"] += [p] * n
+        cols["batch"] += [batch] * n
+        cols["o_orderkey"] += [int(k) for k in keys]
+        cols["o_custkey"] += rng.integers(0, N_CUSTOMERS, n).tolist()
+        cols["o_totalprice"] += np.round(rng.uniform(900.0, 500_000.0, n), 2).tolist()
+
+    top = P.LAKE_ROWS - 1  # newest key so far
+    for p in range(P.LAKE_PASSES):
+        recent = np.arange(top - P.RECENT_KEYS + 1, top + 1)
+        updates = np.sort(rng.choice(recent, P.NARROW_UPDATES, replace=False))
+        add(p, "narrow", [*updates, *range(top + 1, top + 1 + P.NARROW_INSERTS)])
+        top += P.NARROW_INSERTS
+        add(p, "wide", np.arange(P.WIDE_KEYS))
+    return {
+        "pass": np.array(cols["pass"], dtype=np.int32),
+        "batch": cols["batch"],
+        "o_orderkey": np.array(cols["o_orderkey"], dtype=np.int64),
+        "o_custkey": np.array(cols["o_custkey"], dtype=np.int64),
+        "o_totalprice": np.array(cols["o_totalprice"], dtype=np.float64),
     }
 
 
@@ -200,7 +267,8 @@ def _corpus_batch(rng, d: str) -> dict:
         },
         os.path.join(d, "embeddings.parquet"),
     )
-    queries = sorted(int(q) for q in rng.choice(BASE_DOCS * REPLICAS, QUERY_VECTORS, replace=False))
+    queries = sorted(int(q) for q in rng.choice(BASE_DOCS * REPLICAS, P.QUERY_VECTORS, replace=False))
+    _write(_images(rng), os.path.join(d, "images.parquet"))
     return {
         "documents": len(ids),
         "base_documents": BASE_DOCS,
@@ -209,6 +277,28 @@ def _corpus_batch(rng, d: str) -> dict:
         "planted_pairs": [[r * 1_000_000 + a, r * 1_000_000 + b] for r in range(REPLICAS) for a, b in planted],
         "embeddings": BASE_DOCS * REPLICAS,
         "query_vector_ids": [(q // BASE_DOCS) * 1_000_000 + q % BASE_DOCS for q in queries],
+        "images": P.N_IMAGES,
+        **_lake(rng, d),
+    }
+
+
+def _images(rng) -> dict:
+    """Raw 8-bit grayscale images: a seeded gradient plus noise, so the
+    resized statistics differ from image to image."""
+    side = P.IMAGE_SIDE
+    ramp = np.add.outer(np.arange(side), np.arange(side)).astype(np.float64)
+    scale = rng.uniform(0.5, 4.0, P.N_IMAGES)
+    noise = rng.normal(0.0, 20.0, (P.N_IMAGES, side, side))
+    imgs = np.clip(ramp[None] * scale[:, None, None] + noise, 0, 255).astype(np.uint8)
+    meta = pa.StructArray.from_arrays(
+        [pa.array([side] * P.N_IMAGES, pa.int32()), pa.array([side] * P.N_IMAGES, pa.int32()),
+         pa.array([1] * P.N_IMAGES, pa.int32()), pa.array(["raw"] * P.N_IMAGES)],
+        ["height", "width", "channels", "format"],
+    )
+    return {
+        "image_id": np.arange(P.N_IMAGES, dtype=np.int64),
+        "content": pa.array([im.tobytes() for im in imgs], pa.binary()),
+        "meta": meta,
     }
 
 
@@ -218,17 +308,34 @@ GENERATORS = {
 }
 
 
+def version() -> str:
+    """Hash of everything that shapes a cached input directory: this file,
+    params.py, reference.py and the package's query modules, which hold
+    the ORACLE SQL the references run."""
+    queries = os.path.join(os.path.dirname(HERE), "graph_db_clustering_spark", "queries")
+    paths = [os.path.join(HERE, n) for n in ("inputs.py", "params.py", "reference.py")]
+    paths += sorted(os.path.join(queries, f) for f in os.listdir(queries) if f.endswith(".py"))
+    h = hashlib.sha256()
+    for path in paths:
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
+
+
 def ensure_inputs(cache_dir: str, workload: str, seed: int) -> str:
-    """Generate one workload's inputs for ``seed`` unless they are cached;
-    returns their directory. A crash mid-generation leaves only a temp
-    dir, which the next call replaces."""
-    d = os.path.join(cache_dir, f"{workload}-{seed}")
-    if os.path.exists(os.path.join(d, "manifest.json")):
+    """Generate one workload's inputs and references for ``seed`` unless
+    they are cached; returns their directory. A crash mid-generation
+    leaves only a temp dir, which the next call replaces."""
+    import reference
+
+    d = os.path.join(cache_dir, f"{workload}-{seed}-{version()}")
+    if os.path.exists(os.path.join(d, REFERENCES)):
         return d
     tmp = d + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     info = GENERATORS[workload](_rng(workload, seed), tmp)
+    info["seed"] = seed
     # the q01 control scan of bench.py reads this table
     _write(
         {"r_regionkey": np.arange(5, dtype=np.int32),
@@ -237,6 +344,8 @@ def ensure_inputs(cache_dir: str, workload: str, seed: int) -> str:
     )
     with open(os.path.join(tmp, "manifest.json"), "w") as f:
         json.dump(info, f)
+    with open(os.path.join(tmp, REFERENCES), "wb") as f:
+        pickle.dump(reference.prepare(workload, tmp, info), f)
     shutil.rmtree(d, ignore_errors=True)
     os.rename(tmp, d)
     return d
@@ -247,49 +356,19 @@ def manifest(input_dir: str) -> dict:
         return json.load(f)
 
 
-def ensure_references(input_dir: str, workload: str) -> None:
-    """Compute the references of a generated input directory unless they
-    are cached (reference.prepare)."""
-    import reference
-
-    path = os.path.join(input_dir, REFERENCES)
-    if not os.path.exists(path):
-        refs = reference.prepare(workload, input_dir, manifest(input_dir))
-        with open(path + ".tmp", "wb") as f:
-            pickle.dump(refs, f)
-        os.rename(path + ".tmp", path)
-
-
-class References:
-    """The references of an input directory, loaded on first use. ``proc``
-    is the child process computing them (None when they already exist);
-    it runs while the measured process starts its Spark session."""
-
-    def __init__(self, input_dir: str, proc=None):
-        self._path = os.path.join(input_dir, REFERENCES)
-        self._proc = proc
-        self._data = None
-
-    def __getitem__(self, key):
-        if self._data is None:
-            if self._proc is not None and self._proc.wait() != 0:
-                raise RuntimeError("computing the references failed")
-            # written by ensure_references of this benchmark, never taken
-            # from outside
-            with open(self._path, "rb") as f:
-                self._data = pickle.load(f)
-        return self._data[key]
+def references(input_dir: str) -> dict:
+    # written by ensure_inputs of this benchmark, never taken from outside
+    with open(os.path.join(input_dir, REFERENCES), "rb") as f:
+        return pickle.load(f)
 
 
 REFERENCES = "references.pkl"
 
 if __name__ == "__main__":
-    # run.py starts this as a child process: it prints the input directory
-    # as soon as the inputs exist, then computes the references while the
-    # parent starts its session, outside setup_s and its peak memory
+    # run.py runs this to completion before it configures its session, so
+    # generation and the references never share the CPU with a timed
+    # interval; the last stdout line is the input directory
     import sys
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    d = ensure_inputs(sys.argv[1], sys.argv[2], int(sys.argv[3]))
-    print(d, flush=True)
-    ensure_references(d, sys.argv[2])
+    sys.path.insert(0, os.path.dirname(HERE))
+    print(ensure_inputs(sys.argv[1], sys.argv[2], int(sys.argv[3])), flush=True)

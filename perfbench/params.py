@@ -3,8 +3,8 @@
 One place for every number that shapes a workload, so the generated
 inputs, the references and the timed operations cannot disagree. The
 sizes keep one run of a workload to about a minute on a 4-core host,
-where a Spark session alone takes about 10 s to start and every
-operation runs cold (a run is one pass).
+where a Spark session alone takes 10-13 s to start and every Spark job
+costs 0.1-0.25 s of fixed overhead: a run measures one pass.
 """
 
 # ---------------------------------------------------------------------------
@@ -21,13 +21,29 @@ N_REGIONS = 5  # links stay inside a region: one component per region
 LINKS_PER_CUSTOMER = 5
 ISOLATED_SHARE = 0.02  # customers with no links: singleton components
 CROSS_NATION_SHARE = 0.1  # links leaving their nation, inside the region
+HOUSEHOLD_CUSTOMERS = 2_000  # customers in the household clique graph (louvain)
+HOUSEHOLD_SIZES = (3, 10)  # clique sizes drawn uniformly from [lo, hi]
 CYPHER_PARAM_SETS = 24
 
 KMEANS_K = 4
-KMEANS_MAX_ITER = 3
-PAGERANK_MAX_ITER = 3
-CYPHER_PER_PASS = 5
+KMEANS_MAX_ITER = 2
+PAGERANK_MAX_ITER = 2
+LOUVAIN_MAX_SWEEPS = 1  # disjoint cliques settle in the first sweep
+LOUVAIN_MAX_LEVELS = 1
+CYPHER_PER_PASS = 2
 ORDER_ID_OFFSET = 10_000_000  # order vertex ids live above every customer id
+
+# the lakehouse table: LAKE_ROWS orders (key, customer, price), kept in
+# Iceberg by graph_iterative and in Delta and Hudi MERGE_ON_READ by
+# corpus_batch; every pass applies seeded batches
+LAKE_ROWS = 4_000
+LAKE_FILES = 2  # data files / Hudi file groups at creation
+LAKE_PASSES = 8  # batch sets generated; pass p uses set p % LAKE_PASSES
+NARROW_UPDATES = 16  # updates of recently written keys per narrow batch
+NARROW_INSERTS = 4  # new keys per narrow batch
+RECENT_KEYS = 500  # "recent" = among the newest RECENT_KEYS keys
+WIDE_KEYS = LAKE_ROWS // 2  # a wide batch updates every key below this: half the files
+DV_THRESHOLD = 0.5  # delta_merge's default: narrow batches take DVs, wide rewrite
 
 # (Cypher query, DuckDB reference SQL); parameters come from the seed
 CYPHER = [
@@ -60,10 +76,15 @@ CYPHER = [
 BASE_DOCS = 2_000
 REPLICAS = 3
 NEAR_DUP_SHARE = 0.10  # planted near-duplicates among the base documents
-QUERY_VECTORS = 64
+N_IMAGES = 1_500  # raw grayscale images of IMAGE_SIDE x IMAGE_SIDE pixels
+IMAGE_SIDE = 32
+IMAGE_RESIZE = 8  # image_features resizes to IMAGE_RESIZE x IMAGE_RESIZE
 LANGS = ("en", "de", "fr", "es")
 
 DEDUP_THRESHOLD = 0.5
+# traced runs only (Workload.traced_ops): Naive Bayes on the nb_language
+# split and IVF-PQ search of QUERY_VECTORS embeddings
+QUERY_VECTORS = 64
 IVFPQ_CELLS = 16
 IVFPQ_M = 8
 IVFPQ_K = 5
@@ -73,7 +94,8 @@ IVFPQ_CODES = 64  # PQ codewords per subvector
 # both
 # ---------------------------------------------------------------------------
 
-# latency_tail_s is this percentile of the run's operation latencies. A
-# pass is 17-21 operations, so p95 lies between the two slowest.
-TAIL_PCT = 95.0
+# latency_tail_s is this percentile of a run's operation latencies. A pass
+# has 12-18 operations, too few for a percentile with ten samples above it:
+# p90 lies between the second and third slowest of graph_iterative's.
+TAIL_PCT = 90
 RESULT_KEY_STRIDE = 100_000_000  # results-table key = op seq * stride + row id

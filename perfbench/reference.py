@@ -2,9 +2,10 @@
 
 Nothing here imports Spark: references are computed from the generated
 input files with DuckDB (for operations the package declares an ORACLE
-SQL for, plus the seeded Cypher queries), networkx (PageRank within a
-stated tolerance), numpy (k-means, exact nearest neighbours, Jaccard),
-and an in-memory model of the Delta results table. A check raises
+SQL for, plus the seeded Cypher queries), networkx (connected components
+exactly, the household cliques louvain must recover), numpy (PageRank
+within a stated tolerance, k-means, exact nearest neighbours, Jaccard,
+image statistics), and an in-memory model of every lakehouse table. A check raises
 ``CheckFailed``; the runner counts that, like an exception from the
 operation itself, in ``failed``.
 """
@@ -20,22 +21,27 @@ import pyarrow.parquet as pq
 import params as P
 from graph_db_clustering_spark.oracle import canonical_rows, has_toplevel_order_by
 
-# PageRank: the workload runs 3 power steps from uniform ranks; networkx
-# runs until an L1 step is below 1e-8 per vertex. On these link graphs the
-# L1 gap after 3 steps is about 0.021 (0.011 after 4, 0.005 after 6).
-PAGERANK_L1_TOLERANCE = 4e-2
+# PageRank: the reference runs the same power steps; the L1 distance
+# allows for float summation order only.
+PAGERANK_L1_TOLERANCE = 1e-9
 KMEANS_MIN_AGREEMENT = 0.999  # share of points assigned as numpy assigns them
-# recall@5 of IVF-PQ (16 cells, nprobe 4, 64 codewords, 4x re-rank)
-# against exact top-5 measures 0.45-0.6 on these embeddings, whose
-# neighbours inside a label cluster are nearly equidistant; random
-# answers score ~0.001. The floor catches a broken search.
-IVFPQ_MIN_RECALL = 0.25
 # An ideal minhash LSH with 16 bands of 4 rows finds a pair of Jaccard 0.7
 # with p = 0.988. operators.dedup's affine family (a*x + b) mod (2^61 - 1)
 # seldom wraps for 32-bit shingle hashes, so its 64 hashes pick only ~11
 # distinct minima and recall of the planted pairs measures ~0.8. The floor
 # catches a broken pipeline; the measured recall is reported per run.
-NEAR_DUP_MIN_RECALL = 0.5  # recall@k of the IVF-PQ search against exact top-k
+NEAR_DUP_MIN_RECALL = 0.5
+# recall@5 of IVF-PQ (16 cells, nprobe 4, 64 codewords, 4x re-rank)
+# against exact top-5 measures 0.45-0.6 on these embeddings, whose
+# neighbours inside a label cluster are nearly equidistant; random
+# answers score ~0.001. The floor catches a broken search.
+IVFPQ_MIN_RECALL = 0.25
+# declared queries whose ORACLE SQL the references run (inputs.version
+# hashes their text)
+ORACLE_USED = ("pipeline_corpus", "nb_language")
+# the text-quality pipeline runs on the first 500 base documents: its
+# DuckDB reference is regex-heavy and would dominate input generation
+QUALITY_DOCS = "doc_id < 500"
 
 
 class CheckFailed(AssertionError):
@@ -52,17 +58,19 @@ def expect(cond: bool, what: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def duck(input_dir: str):
-    """A DuckDB connection with one view per generated parquet file."""
+def duck(input_dir: str, where: dict | None = None):
+    """A DuckDB connection with one view per generated parquet file;
+    ``where`` maps a view to a row filter."""
     import duckdb
 
     con = duckdb.connect()
     con.execute("SET enable_progress_bar = false")
     for f in sorted(os.listdir(input_dir)):
         if f.endswith(".parquet"):
+            cond = (where or {}).get(f[:-8], "TRUE")
             con.execute(
                 f"CREATE VIEW {f[:-8]} AS SELECT * FROM "
-                f"read_parquet('{os.path.join(input_dir, f)}')"
+                f"read_parquet('{os.path.join(input_dir, f)}') WHERE {cond}"
             )
     return con
 
@@ -97,18 +105,62 @@ def link_graph(input_dir: str):
     return g
 
 
-def pagerank(g) -> dict[int, float]:
-    # the pure-Python solver: scipy is not a dependency of this project
-    from networkx.algorithms.link_analysis.pagerank_alg import _pagerank_python
+def min_id_labels(g) -> dict[int, int]:
+    """Each vertex's weakly connected component, labelled by its smallest
+    vertex id: connected_components' answer, and louvain's on disjoint
+    cliques."""
+    import networkx as nx
 
-    return _pagerank_python(g, alpha=0.85, tol=1e-8, max_iter=500)
+    out = {}
+    for comp in nx.weakly_connected_components(g) if g.is_directed() else nx.connected_components(g):
+        m = min(comp)
+        out.update((v, m) for v in comp)
+    return out
+
+
+def household_graph(input_dir: str):
+    import networkx as nx
+
+    h = pq.read_table(os.path.join(input_dir, "households.parquet")).to_pydict()
+    return nx.Graph(zip(h["src"], h["dst"]))
+
+
+def check_labels(pdf, col: str, expected: dict[int, int], what: str) -> None:
+    """Every vertex carries exactly the expected label."""
+    got = dict(zip(pdf["id"].tolist(), pdf[col].tolist()))
+    expect(len(got) == len(pdf), f"{what}: a vertex appears twice")
+    expect(set(got) == set(expected), f"{what}: vertex set differs")
+    wrong = sum(got[v] != c for v, c in expected.items())
+    expect(wrong == 0, f"{what}: {wrong} vertices labelled unlike networkx")
+
+
+def pagerank(g, steps: int, alpha: float = 0.85) -> dict[int, float]:
+    """``steps`` PageRank power steps from uniform ranks over the networkx
+    graph ``g``, as graph_algos.pagerank runs them: uniform teleport,
+    dangling vertices' rank spread uniformly. NumPy, because networkx's
+    own solver needs scipy (not a dependency) and iterates to
+    convergence."""
+    nodes = list(g)
+    pos = {v: i for i, v in enumerate(nodes)}
+    n = len(nodes)
+    src = np.array([pos[a] for a, _ in g.edges()], dtype=np.int64)
+    dst = np.array([pos[b] for _, b in g.edges()], dtype=np.int64)
+    deg = np.bincount(src, minlength=n).astype(np.float64)
+    dangling = deg == 0
+    x = np.full(n, 1.0 / n)
+    for _ in range(steps):
+        share = np.where(dangling, 0.0, x / np.where(dangling, 1.0, deg))
+        x = (1.0 - alpha) / n + alpha * (
+            np.bincount(dst, weights=share[src], minlength=n) + x[dangling].sum() / n
+        )
+    return dict(zip(nodes, x.tolist()))
 
 
 def check_pagerank(pdf, expected: dict[int, float]) -> None:
     got = dict(zip(pdf["id"].tolist(), pdf["rank"].tolist()))
     expect(set(got) == set(expected), "pagerank: vertex set differs")
     l1 = sum(abs(got[v] - r) for v, r in expected.items())
-    expect(l1 <= PAGERANK_L1_TOLERANCE, f"pagerank: L1 distance {l1:.2e} to networkx")
+    expect(l1 <= PAGERANK_L1_TOLERANCE, f"pagerank: L1 distance {l1:.2e} to numpy")
 
 
 def kmeans(vecs: np.ndarray, ids: np.ndarray, k: int, max_iter: int) -> np.ndarray:
@@ -175,6 +227,40 @@ def check_near_dups(pairs, texts: dict, planted: set, threshold: float) -> float
     return recall
 
 
+def check_near_dups_against(pairs, texts: dict, planted: set, threshold: float) -> float:
+    """near_dups_against of the odd-id base documents against the index
+    of the even-id ones: the same checks as check_near_dups, over the
+    planted base pairs that straddle the two sides. Returns the recall."""
+    for a, b, _ in pairs:
+        expect(a % 2 == 1 and b % 2 == 0, f"near dups against: pair ({a},{b}) not batch x index")
+    straddle = {(a, b) if a % 2 else (b, a) for a, b in planted if (a + b) % 2 and a < 1_000_000}
+    return check_near_dups(pairs, texts, straddle, threshold)
+
+
+def image_features(input_dir: str, resize: int) -> dict[int, tuple]:
+    """The seven statistics of every generated image after a
+    nearest-neighbour resize to ``resize`` x ``resize``: mean, std,
+    median, min, max, the row-0 self-correlation (1.0) and the row-0
+    sample variance, as the pipeline this operator reproduces stores them."""
+    t = pq.read_table(os.path.join(input_dir, "images.parquet")).to_pydict()
+    out = {}
+    for iid, content, meta in zip(t["image_id"], t["content"], t["meta"]):
+        h, w = meta["height"], meta["width"]
+        img = np.frombuffer(content, dtype=np.uint8).reshape(h, w)
+        g = img[np.arange(resize) * h // resize][:, np.arange(resize) * w // resize].astype(np.float64)
+        out[iid] = (g.mean(), g.std(), np.median(g), g.min(), g.max(), 1.0, np.var(g[0], ddof=1))
+    return out
+
+
+def check_image_features(pdf, expected: dict[int, tuple]) -> None:
+    expect(sorted(pdf["id"].tolist()) == sorted(expected), "image features: image set differs")
+    cols = ["mean", "std", "median", "min", "max", "corrcoef", "covariance"]
+    got = pdf[cols].to_numpy()
+    want = np.array([expected[i] for i in pdf["id"].tolist()])
+    err = float(np.abs(got - want).max())
+    expect(err < 1e-6, f"image features: max error {err:.2e} against numpy")
+
+
 def check_ivfpq(pdf, ids: np.ndarray, mat: np.ndarray, k: int) -> float:
     """Scores are exact cosines of the returned pairs, and recall@k
     against exact top-k clears IVFPQ_MIN_RECALL. ``mat`` holds the unit
@@ -205,6 +291,7 @@ class TableModel:
 
     def __init__(self, keys=(), values=()):
         self.rows = {int(k): round(float(v) * 100) for k, v in zip(keys, values)}
+        self.aux: dict = {}  # key -> the row's other integer column, if any
 
     def upsert(self, keys, values) -> None:
         for k, v in zip(keys, values):
@@ -216,6 +303,17 @@ class TableModel:
             (k, c) for k, c in self.rows.items() if (lo is None or lo <= k <= hi)
         ]
         return len(sel), sum(k for k, _ in sel), sum(c for _, c in sel)
+
+
+def batch_summary(frames) -> tuple[int, int, int]:
+    """(rows, key sum, sum of values in cents) over (key, value) frames:
+    what a change feed of exactly those writes carries."""
+    n = ks = cs = 0
+    for keys, values in frames:
+        n += len(keys)
+        ks += sum(int(k) for k in keys)
+        cs += sum(round(float(v) * 100) for v in values)
+    return n, ks, cs
 
 
 def check_summary(got: tuple, model: TableModel, what: str, lo=None, hi=None) -> None:
@@ -240,6 +338,7 @@ def _graph_iterative(d: str, manifest: dict) -> dict:
     t = pq.read_table(os.path.join(d, "embeddings.parquet"))
     ids = t.column("vec_id").to_numpy()
     vecs = np.stack(t.column("embedding").to_numpy(zero_copy_only=False)).astype(np.float64)
+    households = household_graph(d)
     con = duck(d)
     try:
         cypher = [
@@ -249,7 +348,9 @@ def _graph_iterative(d: str, manifest: dict) -> dict:
     finally:
         con.close()
     return {
-        "pagerank": pagerank(g),
+        "pagerank": pagerank(g, P.PAGERANK_MAX_ITER),
+        "components": min_id_labels(g),
+        "households": min_id_labels(households),
         "kmeans_ids": ids,
         "kmeans": kmeans(vecs, ids, P.KMEANS_K, P.KMEANS_MAX_ITER),
         "cypher": cypher,
@@ -262,17 +363,20 @@ def _corpus_batch(d: str, manifest: dict) -> dict:
     e = pq.read_table(os.path.join(d, "embeddings.parquet"))
     mat = np.stack(e.column("embedding").to_numpy(zero_copy_only=False)).astype(np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    con = duck(d)
-    try:
-        oracle = {"nb_language": sql_rows(con, ORACLE["nb_language"])}
-    finally:
-        con.close()
+    oracle = {}
+    for q in ORACLE_USED:
+        con = duck(d, {"documents": QUALITY_DOCS} if q == "pipeline_corpus" else None)
+        try:
+            oracle[q] = sql_rows(con, ORACLE[q])
+        finally:
+            con.close()
     return {
-        "texts": _texts(os.path.join(d, "documents.parquet")),
-        "planted": {tuple(x) for x in manifest["planted_pairs"]},
         "vec_ids": e.column("vec_id").to_numpy(),
         "unit_vecs": mat,
+        "texts": _texts(os.path.join(d, "documents.parquet")),
+        "planted": {tuple(x) for x in manifest["planted_pairs"]},
         "oracle": oracle,
+        "images": image_features(d, P.IMAGE_RESIZE),
     }
 
 

@@ -205,24 +205,32 @@ def fold_event_log(log_dir: str) -> tuple[dict[int, dict], dict[str, int]]:
     return {op: dict(v) for op, v in ops.items()}, dict(span_jobs)
 
 
+FORMATS = ("sources.delta", "sources.hudi_mor", "sources.iceberg")
 # spans whose mean duration is a per-layer metric: metric name -> span name
 SPAN_SECONDS = {
     "operators.kmeans.fit_s": "operators.kmeans.fit",
     "operators.graph_algos.pagerank_s": "operators.graph_algos.pagerank",
+    "operators.graph_algos.connected_components_s": "operators.graph_algos.connected_components",
+    "operators.graph_algos.louvain_s": "operators.graph_algos.louvain",
     "cypher.compile_s": "cypher.compile",
     "cypher.execute_s": "cypher.execute",
     "operators.dedup.minhash_dedup_s": "operators.dedup.minhash_dedup",
+    "operators.dedup.near_dups_against_s": "operators.dedup.near_dups_against",
     "operators.classify.nb_train_s": "operators.classify.nb_train",
     "operators.classify.nb_score_s": "operators.classify.nb_score",
     "operators.similarity.ivfpq_search_s": "operators.similarity.ivfpq_search",
-    "sources.delta.commit_s": "sources.delta.commit",
-    "sources.delta.read_plan_s": "sources.delta.read_plan",
-    "sources.delta.scan_s": "sources.delta.scan",
+    "operators.text.clean_corpus_s": "operators.text.clean_corpus",
+    "operators.multimodal.image_features_s": "operators.multimodal.image_features",
+    **{f"{fmt}.{s}_s": f"{fmt}.{s}" for fmt in FORMATS for s in ("commit", "read_plan", "scan")},
+    "sources.delta.merge_dv_s": "sources.delta.merge_dv",
+    "sources.delta.merge_cow_s": "sources.delta.merge_cow",
+    "sources.hudi_mor.log_compact_s": "sources.hudi_mor.log_compact",
     "streaming.cdf_read_s": "streaming.cdf_read",
 }
 # spans whose mean job count per call is a per-layer metric
 SPAN_JOBS = {
-    "operators.graph_algos.pagerank_jobs": "operators.graph_algos.pagerank",
+    f"operators.graph_algos.{a}_jobs": f"operators.graph_algos.{a}"
+    for a in ("pagerank", "connected_components", "louvain")
 }
 # counts recorded by the workloads; the metric is their mean
 COUNTS = {
@@ -230,9 +238,9 @@ COUNTS = {
     "operators.dedup.verified_per_candidate": "ratio",
     "operators.dedup.planted_recall": "ratio",
     "operators.similarity.ivfpq_recall": "ratio",
-    "sources.delta.files_per_commit": "count",
-    "sources.delta.bytes_written_per_user_byte": "ratio",
-    "sources.delta.pruned_kept_frac": "ratio",
+    **{f"{fmt}.files_per_commit": "count" for fmt in FORMATS},
+    **{f"{fmt}.{c}": "ratio" for fmt in FORMATS for c in ("bytes_written_per_user_byte", "pruned_kept_frac")},
+    "sources.hudi_mor.live_log_blocks": "count",
 }
 # per-op means of the event-log fold: metric name -> (fold key, unit)
 SPARK_PER_OP = {
@@ -259,9 +267,11 @@ def per_layer(records, tracer: Tracer, fold, cpus: int, jvm_cpu_s: float, py_cpu
 
     ``records`` are the runner's (seq, name, kind, latency, ok, live pins)
     rows; ``fold`` is fold_event_log's result. Per-op values are means
-    over every operation of the run; a layer the workload does not
-    exercise reads 0."""
-    spark_ops, span_jobs = fold
+    over the operations of the timed passes (traced-only operations count
+    in span timings only); a layer the workload does not exercise reads 0."""
+    in_pass = {r[0] for r in records}
+    spark_ops = {seq: o for seq, o in fold[0].items() if seq in in_pass}
+    span_jobs = fold[1]
     n = len(records)
     out = {}
     for name, (key, unit) in SPARK_PER_OP.items():

@@ -69,6 +69,49 @@ def test_pagerank_check_rejects_a_wrong_reference():
         ref.check_pagerank(pd.DataFrame({"id": [0, 1, 2], "rank": [0.2, 0.3, 0.5]}), ranks)
 
 
+def test_pagerank_reference_converges_to_networkx():
+    import networkx as nx
+    from networkx.algorithms.link_analysis.pagerank_alg import _pagerank_python
+
+    g = nx.gnp_random_graph(200, 0.03, seed=1, directed=True)
+    g.add_nodes_from(range(200, 205))  # dangling, isolated vertices
+    ours = ref.pagerank(g, steps=300)
+    theirs = _pagerank_python(g, tol=1e-13, max_iter=1000)
+    assert sum(abs(ours[v] - theirs[v]) for v in g) < 1e-9
+
+
+def test_label_check_rejects_a_wrong_reference():
+    import networkx as nx
+
+    g = nx.Graph([(3, 4), (4, 5), (7, 8)])
+    expected = ref.min_id_labels(g)
+    assert expected == {3: 3, 4: 3, 5: 3, 7: 7, 8: 7}
+    right = pd.DataFrame({"id": [3, 4, 5, 7, 8], "component": [3, 3, 3, 7, 7]})
+    ref.check_labels(right, "component", expected, "cc")
+    for wrong in ([3, 3, 3, 7, 8], [3, 3, 3, 3, 3]):
+        with pytest.raises(ref.CheckFailed):
+            ref.check_labels(right.assign(component=wrong), "component", expected, "cc")
+    with pytest.raises(ref.CheckFailed):  # a vertex missing
+        ref.check_labels(right.iloc[:4], "component", expected, "cc")
+
+
+def test_image_feature_check_rejects_a_wrong_reference():
+    expected = {0: (1.0, 0.0, 1.0, 1.0, 1.0, 1.0, 0.0), 1: (2.0, 0.5, 2.0, 1.0, 3.0, 1.0, 0.25)}
+    pdf = pd.DataFrame(
+        [(i, *v) for i, v in expected.items()],
+        columns=["id", "mean", "std", "median", "min", "max", "corrcoef", "covariance"],
+    )
+    ref.check_image_features(pdf, expected)
+    with pytest.raises(ref.CheckFailed):
+        ref.check_image_features(pdf.assign(std=[0.0, 0.6]), expected)
+
+
+def test_change_feed_summary_counts_every_write():
+    narrow = ([5, 6], [1.25, 2.5])
+    wide = ([1, 5], [3.0, 4.0])
+    assert ref.batch_summary([narrow, wide]) == (4, 17, 1075)
+
+
 def test_table_model_detects_a_lost_write():
     model = ref.TableModel([1, 2], [10.0, 20.0])
     model.upsert([2, 3], [25.5, 30.0])
@@ -98,7 +141,8 @@ def test_inputs_are_seeded(tmp_path):
         inputs.ensure_inputs(str(tmp_path / name), "graph_iterative", seed)
         for name, seed in (("a", 7), ("b", 7), ("c", 8))
     )
-    inputs.ensure_references(d1, "graph_iterative")
+    # the cache key names the code that shaped the inputs
+    assert os.path.basename(d1) == f"graph_iterative-7-{inputs.version()}"
     files = sorted(f for f in os.listdir(d1) if f.endswith(".parquet"))
     assert files == sorted(f for f in os.listdir(d2) if f.endswith(".parquet"))
     for f in files:
@@ -106,7 +150,7 @@ def test_inputs_are_seeded(tmp_path):
             assert a.read() == b.read(), f
     m1, m2, m3 = (inputs.manifest(d) for d in (d1, d2, d3))
     assert m1 == m2 and m1 != m3
-    r1 = inputs.References(d1)
+    r1 = inputs.references(d1)
     assert r1["pagerank"] and len(r1["cypher"]) == len(m1["cypher_params"])
 
 
