@@ -28,6 +28,7 @@ import json
 import os
 import shlex
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -74,6 +75,102 @@ def _configure_env(run_dir: str, traced: bool) -> int:
         f"--conf {shlex.quote(c)}" for c in conf
     ) + " pyspark-shell"
     return cpus
+
+
+def _stat(pid) -> list | None:
+    """The fields of /proc/<pid>/stat after the command name (state,
+    parent, ...; [19] is the start time), or None once it has ended."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return None
+
+
+def _process_tree(root: int) -> set:
+    """(pid, start time) of every live descendant of ``root``; the start
+    time tells a process from a later one given the same pid."""
+    parent, start = {}, {}
+    for name in os.listdir("/proc"):
+        if name.isdigit() and (st := _stat(name)) is not None:
+            parent[int(name)], start[int(name)] = int(st[1]), st[19]
+    tree, todo = set(), [root]
+    while todo:
+        pid = todo.pop()
+        for child, ppid in parent.items():
+            if ppid == pid:
+                tree.add((child, start[child]))
+                todo.append(child)
+    return tree
+
+
+def _alive(proc) -> bool:
+    st = _stat(proc[0])
+    return st is not None and st[19] == proc[1] and st[0] != "Z"
+
+
+def _wait_gone(procs, timeout: float) -> set:
+    """Wait up to ``timeout`` seconds for ``procs`` to end; the ones still
+    running."""
+    deadline = time.monotonic() + timeout
+    while True:
+        procs = {p for p in procs if _alive(p)}
+        if not procs or time.monotonic() >= deadline:
+            return procs
+        time.sleep(0.05)
+
+
+def _stop_processes() -> None:
+    """Stop the Spark session, the JVM pyspark launched and its Python
+    workers, and every other process this one started, and wait until
+    each has ended: the run leaves nothing behind."""
+    from pyspark import SparkContext
+
+    procs = _process_tree(os.getpid())
+    if SparkContext._active_spark_context is not None:
+        try:
+            SparkContext._active_spark_context.stop()
+        except Exception:
+            traceback.print_exc()
+    gateway = SparkContext._gateway
+    jvm = getattr(gateway, "proc", None)
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:
+            traceback.print_exc()
+    if jvm is not None:
+        # the JVM exits when its stdin closes
+        try:
+            jvm.stdin.close()
+        except (OSError, AttributeError):
+            pass
+        try:
+            jvm.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            jvm.kill()
+            jvm.wait()
+    procs |= _process_tree(os.getpid())
+    left = _wait_gone(procs, 10)
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for pid, _ in left:
+            try:
+                os.kill(pid, sig)
+            except OSError:
+                pass
+        for pid, _ in left:
+            try:
+                os.waitpid(pid, os.WNOHANG)  # reap our own children
+            except OSError:
+                pass
+        left = _wait_gone(left, 5)
+        if not left:
+            return
+    print(f"perfbench: processes still running: {sorted(p for p, _ in left)}", file=sys.stderr)
+
+
+def _terminated(signum, frame):
+    raise SystemExit(128 + signum)
 
 
 def _median(xs):
@@ -138,10 +235,12 @@ def main(argv=None) -> int:
     run_dir = os.path.join(work, f"run-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
+    signal.signal(signal.SIGTERM, _terminated)
     try:
         refs = inputs.references(input_dir)
         return _run(args, WORKLOADS[args.workload], input_dir, refs, run_dir)
     finally:
+        _stop_processes()
         shutil.rmtree(run_dir, ignore_errors=True)
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pandas as pd
 import pyarrow as pa
@@ -19,7 +21,7 @@ import pytest
 import inputs
 import reference as ref
 import spans
-from run import execute
+from run import _stop_processes, execute
 from workloads import KIND_COMPUTE, Op
 
 
@@ -134,6 +136,15 @@ def test_kmeans_reference_is_a_stable_partition():
     ref.check_kmeans(pdf, ids, assign)
     with pytest.raises(ref.CheckFailed):
         ref.check_kmeans(pdf, ids, 1 - assign)
+
+
+def test_stop_processes_leaves_no_child_running():
+    """A child that would outlive the run is ended and reaped."""
+    child = subprocess.Popen(
+        [sys.executable, "-c", "import signal, time; signal.signal(signal.SIGTERM, signal.SIG_IGN); time.sleep(120)"]
+    )
+    _stop_processes()
+    assert child.poll() is not None
 
 
 def test_inputs_are_seeded(tmp_path):
